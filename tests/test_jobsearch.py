@@ -51,6 +51,20 @@ class TestHtmlToLines:
         assert "skip me" not in lines and "var skip=1;" not in lines
         assert "Engineer at Acme" in lines
 
+    def test_unclosed_meta_keeps_page_text(self):
+        # Browser saves write <meta charset> unclosed; the void element
+        # must not open a skipped region that swallows the rest.
+        html = (
+            '<!DOCTYPE html><html><head><meta charset="utf-8"><title>My jobs</title>'
+            "</head><body><div>Your recent activity</div><div>Job 1 - X</div>"
+            "<div>Show deleted jobs</div></body></html>"
+        )
+        want = ["Your recent activity", "Job 1 - X", "Show deleted jobs"]
+        assert html_to_lines(html.encode(), "utf-8") == want
+        from tomasz_weight_tracker_spark.pipelines.jobsearch import mhtml_text_lines
+
+        assert mhtml_text_lines(mhtml_bytes(html)) == want
+
 
 class TestProcessBlock:
     def test_status_in_line(self):
@@ -228,6 +242,9 @@ class TestFastPartsEquivalence:
         b"Content-Type: text/html\r\n\r\n<p>text</p><p",
         b"Content-Type: text/html\r\n\r\n<p>a > b</p>",
         b"Content-Type: text/html\r\n\r\nleading<p>mid</p>trailing",
+        # long text before '&': the gate regex must stay linear-time
+        b"Content-Type: text/html\r\n\r\n<p>" + b"a" * 4000 + b"&amp;</p>",
+        b"Content-Type: text/html\r\n\r\n<meta charset=utf-8><p>after meta</p>",
         # slow-path declines (None -> BytesParser decides)
         b"Content-Type: text/html\r\nContent-Transfer-Encoding: quoted-printable\r\n\r\n<p>caf=C3=A9</p>",
         (
@@ -248,6 +265,16 @@ class TestFastPartsEquivalence:
 
         for raw in self.ZOO:
             assert mhtml_text_lines(raw) == self._old_lines(raw), raw[:80]
+
+    def test_gate_regex_is_linear(self):
+        import time
+
+        from tomasz_weight_tracker_spark.pipelines.jobsearch import _SIMPLE_HTML_RE
+
+        for text in ("<p>" + "a" * 5000 + "&amp;</p>", "<p>a</p>" * 2000 + "<p"):
+            t0 = time.perf_counter()
+            assert _SIMPLE_HTML_RE.match(text) is None
+            assert time.perf_counter() - t0 < 0.5
 
     def test_declines_return_none(self):
         from tomasz_weight_tracker_spark.pipelines.jobsearch import _fast_parts

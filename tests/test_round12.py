@@ -177,14 +177,18 @@ class TestTuneForScale:
     def test_proportionality_and_bounds(self, tmp_path):
         from tomasz_weight_tracker_spark.session import (
             _DEFAULT_CPUS,
-            data_bytes,
+            parquet_sizes,
         )
 
         rule = lambda b: max(8, min(4 * _DEFAULT_CPUS, (b >> 19) + 1))  # noqa: E731
+        cap = 4 * _DEFAULT_CPUS
         assert rule(0) == 8                      # empty -> floor
         assert rule(2 << 20) == 8                # sf0.01-ish -> floor
-        assert rule(17 << 20) == 35              # sf0.1-ish -> ~cores
-        assert rule(10 << 30) == 4 * _DEFAULT_CPUS  # sf1+ -> cap
+        assert rule(17 << 20) == min(cap, 35)    # sf0.1-ish -> ~cores
+        # One value on each side of the cap: (b >> 19) + 1 == cap - 1, cap + 1.
+        assert rule((cap - 2) << 19) == max(8, cap - 1)
+        assert rule(cap << 19) == cap
+        assert rule(10 << 30) == cap             # sf1+ -> cap
 
         d = tmp_path / "corpus"
         d.mkdir()
@@ -192,7 +196,15 @@ class TestTuneForScale:
         (d / "sub").mkdir()
         (d / "sub" / "u.parquet").write_bytes(b"y" * 2048)
         (d / "notes.txt").write_bytes(b"z" * 4096)  # non-parquet ignored
-        assert data_bytes(str(d)) == 3072
+        # A single file, a directory (walked recursively), a missing path.
+        assert parquet_sizes(str(d / "t.parquet")) == {str(d / "t.parquet"): 1024}
+        assert parquet_sizes(str(d)) == {
+            str(d / "t.parquet"): 1024,
+            str(d / "sub" / "u.parquet"): 2048,
+        }
+        assert parquet_sizes(f"file://{d}/t.parquet") == {str(d / "t.parquet"): 1024}
+        assert parquet_sizes(str(d / "missing.parquet")) is None
+        assert parquet_sizes("s3a://bucket/t.parquet") is None  # non-local
 
     def test_sets_session_conf(self, spark, tmp_path):
         from tomasz_weight_tracker_spark.session import tune_for_scale

@@ -87,11 +87,12 @@ _CHARSET_TOKEN_RE = re.compile(r"[A-Za-z0-9_.:+-]+\Z")
 # HTML whose text extraction is provably a tag-split: only plain
 # begin/end tags (no quotes or '&' anywhere, so no charrefs, comments,
 # doctypes, processing instructions, or attribute values that could
-# hide '<'/'>').  Both alternatives consume >=1 char and are disjoint
-# on their first char, so the match is linear-time.
-_SIMPLE_HTML_RE = re.compile(r"(?:<[a-zA-Z/][^<>\"'&]*>|[^<&]+)*\Z")
+# hide '<'/'>').  Linear-time: every repetition starts at a '<' that
+# neither text run can consume, and a tag ends at its first '>', so
+# there is exactly one way to match and nothing to backtrack into.
+_SIMPLE_HTML_RE = re.compile(r"\A[^<&]*(?:<[a-zA-Z/][^<>\"'&]*>[^<&]*)*\Z")
 _TAG_SPLIT_RE = re.compile(r"<[^>]*>")
-_SKIP_TAG_RE = re.compile(r"</?(?:script|style|head|title|noscript|meta)\b", re.I)
+_SKIP_TAG_RE = re.compile(r"</?(?:script|style|head|title|noscript)\b", re.I)
 
 
 def _fast_parts(raw: bytes) -> list[tuple[bytes, str | None]] | None:
@@ -157,12 +158,14 @@ def _fast_parts(raw: bytes) -> list[tuple[bytes, str | None]] | None:
 
 
 class _TextExtractor(HTMLParser):
-    """BS4-free HTML -> text: drops script/style/head/title/noscript/meta
+    """BS4-free HTML -> text: drops script/style/head/title/noscript
     content, joins remaining text nodes with newlines (the observable
     behavior of the reference's soup.get_text(separator='\\n') after
-    decomposing those tags)."""
+    decomposing those tags).  ``meta`` is a void element with no content
+    to drop; counting it here would let an unclosed ``<meta charset>``
+    hide the rest of the page."""
 
-    SKIP = {"script", "style", "head", "title", "noscript", "meta"}
+    SKIP = {"script", "style", "head", "title", "noscript"}
 
     def __init__(self) -> None:
         super().__init__(convert_charrefs=True)

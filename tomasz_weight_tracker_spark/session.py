@@ -10,8 +10,12 @@ a shuffle-partition count sized to the input (see ``for_scale``).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import TypeVar
 
 from pyspark.sql import SparkSession
+
+_T = TypeVar("_T")
 
 _DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -93,6 +97,31 @@ def fixed_scratch_dir(tag: str) -> str:
     return _FIXED_SCRATCH[tag]
 
 
+# The one memo for per-application query state: a single slot holding
+# the current application's id and its entries.  A different
+# applicationId (a stopped and rebuilt session, a new process) replaces
+# the slot, so nothing built by a dead application outlives it.
+_APP_MEMO: tuple[str, dict] = ("", {})
+
+
+def app_memo(spark: SparkSession, key: tuple, build: Callable[[], _T]) -> _T:
+    """Return ``build()``, computed once per Spark application and key.
+
+    For deterministic functions of the input tables whose results
+    belong to the running application (resolved DataFrames, eager
+    checkpoints): every session of one SparkContext shares them, and a
+    new application always recomputes from the inputs.
+    """
+    global _APP_MEMO
+    app_id = spark.sparkContext.applicationId
+    if _APP_MEMO[0] != app_id:
+        _APP_MEMO = (app_id, {})
+    entries = _APP_MEMO[1]
+    if key not in entries:
+        entries[key] = build()
+    return entries[key]
+
+
 def shuffle_partitions_for(input_bytes: int, target_partition_bytes: int = 128 << 20) -> int:
     """Size shuffle parallelism to the data: ~128 MiB per post-shuffle
     partition, floored at the core count.  At 100 TB this yields
@@ -101,18 +130,38 @@ def shuffle_partitions_for(input_bytes: int, target_partition_bytes: int = 128 <
     return max(_DEFAULT_CPUS, input_bytes // target_partition_bytes)
 
 
-def data_bytes(sf_dir: str) -> int:
-    """Total parquet bytes under a test-corpus directory (tables may be
-    single files or Spark-written directories)."""
-    total = 0
-    for root, _dirs, files in os.walk(sf_dir):
+def parquet_sizes(path: str) -> dict[str, int] | None:
+    """The ``.parquet`` files under a parquet path, with their sizes.
+
+    The one size reader behind every input-size decision (shuffle
+    partitions, the widen gate, star pre-aggregation, the LM broadcast,
+    compaction).  ``path`` may be a single file, a Spark-written table
+    directory, or a corpus directory of either (walked recursively);
+    non-parquet files are ignored.  Returns ``None`` — size unknown —
+    for a missing path or a non-local URI, so each caller applies its
+    own stated unknown-size default instead of misreading a directory
+    inode as the data size.
+    """
+    if path.startswith("file:"):
+        from urllib.parse import unquote, urlparse
+
+        path = unquote(urlparse(path).path)
+    elif "://" in path:
+        return None
+    if os.path.isfile(path):
+        return {path: os.path.getsize(path)}
+    if not os.path.isdir(path):
+        return None
+    sizes = {}
+    for root, _dirs, files in os.walk(path):
         for f in files:
             if f.endswith(".parquet"):
+                full = os.path.join(root, f)
                 try:
-                    total += os.path.getsize(os.path.join(root, f))
+                    sizes[full] = os.path.getsize(full)
                 except OSError:
-                    pass
-    return total
+                    pass  # removed mid-walk
+    return sizes
 
 
 def tune_for_scale(spark: SparkSession, sf_dir: str) -> int:
@@ -130,6 +179,7 @@ def tune_for_scale(spark: SparkSession, sf_dir: str) -> int:
     is runtime-settable, so catalog runners call this per scale
     factor on a shared session.
     """
-    n = max(8, min(4 * _DEFAULT_CPUS, (data_bytes(sf_dir) >> 19) + 1))
+    nbytes = sum((parquet_sizes(sf_dir) or {}).values())  # unknown: the floor
+    n = max(8, min(4 * _DEFAULT_CPUS, (nbytes >> 19) + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n

@@ -18,6 +18,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import parquet_sizes
+
 # Touched-partition count above which upsert_by_key's prune switches
 # from a static OR-chain predicate to a broadcast semi-join (see the
 # inline comment in upsert_by_key).
@@ -207,15 +209,8 @@ def compact_table(
     the same path (same single-writer posture as ``upsert_by_key``);
     on a partitioned table run it per partition directory.
     """
-    import os
-
     path = Path(path)
-    total = sum(
-        os.path.getsize(Path(root) / f)
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
+    total = sum((parquet_sizes(str(path)) or {}).values())
     n_files = max(1, -(-total // target_file_bytes))
     df = spark.read.parquet(str(path)).localCheckpoint()
     df.repartition(n_files).write.mode("overwrite").parquet(str(path))
